@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line.
   *
@@ -13,16 +11,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSession.cpus(32)
+    val spark = LocalSession(cpus)
 
     import scala.jdk.CollectionConverters._
     def gcMillis(): Long = java.lang.management.ManagementFactory
@@ -129,13 +119,7 @@ object Bench {
     // collided once two catalog queries shared a number
     // (q303_jarque_bera / q303_periodogram landed on one rolling-best
     // row, so a regression in the slower member hid behind the faster
-    // member's min — VERDICT r13 item 1). Legacy short-keyed baseline
-    // files migrate on read: a stored "qN" value applies to the one
-    // catalog query with that prefix, and ambiguous prefixes drop their
-    // stale best (re-recorded by this run).
-    def qk(k: String): String = k
-    def shortKey(k: String): String =
-      "q" + k.takeWhile(_ != '_').dropWhile(!_.isDigit).toInt
+    // member's min — VERDICT r13 item 1).
 
     // Round-over-round guard (VERDICT r5 item 7, tightened per r7): the
     // stored baseline holds the BEST-KNOWN time per query at this scale
@@ -183,18 +167,6 @@ object Bench {
           (m, c)
         }
       }
-    // legacy-file migration: stored keys may be numeric-prefix shorts.
-    // A short key resolves to the unique catalog query carrying that
-    // prefix; a prefix shared by two catalog queries (the q303/q304
-    // collision this migration exists to fix) gets NO stored best —
-    // that row's history was a min across two different queries and is
-    // not a trustworthy floor for either.
-    val uniquePrefix: Map[String, String] = all.groupBy(shortKey)
-      .collect { case (s, Seq(one)) => s -> one }
-    val prevByName: Map[String, Double] =
-      prev.filter { case (k, _) => all.contains(k) } ++
-        prev.flatMap { case (s, v) => uniquePrefix.get(s).map(_ -> v) }
-          .filterNot { case (k, _) => prev.contains(k) }
     // Re-baseline markers: best-known minima are ALL-TIME, so a DELIBERATE
     // design change that trades local speed for scale-safety (r10: q171's
     // checkpoint-frozen shape was faster locally but fail-stop under block
@@ -204,21 +176,16 @@ object Bench {
     // best with the fresh measurement (instead of min-merging) and report
     // it as a re-baseline, not a regression; the marker is consumed by
     // that run (one-shot — it cannot silently absorb later regressions).
-    val rebaseline: Map[String, String] = {
-      val raw =
-        if (!prevFile.exists) Map.empty[String, String]
-        else {
-          val txt = scala.io.Source.fromFile(prevFile).mkString
-          """"rebaseline":\{([^}]*)\}""".r.findFirstMatchIn(txt)
-            .map(m => """"(q\w+)":"([^"]*)"""".r.findAllMatchIn(m.group(1))
-              .map(x => x.group(1) -> x.group(2)).toMap)
-            .getOrElse(Map.empty[String, String])
-        }
-      // same legacy-short migration as the best-known map
-      raw.filter { case (k, _) => all.contains(k) } ++
-        raw.flatMap { case (s, v) => uniquePrefix.get(s).map(_ -> v) }
-          .filterNot { case (k, _) => raw.contains(k) }
-    }
+    val rebaseline: Map[String, String] =
+      if (!prevFile.exists) Map.empty[String, String]
+      else {
+        val txt = scala.io.Source.fromFile(prevFile).mkString
+        """"rebaseline":\{([^}]*)\}""".r.findFirstMatchIn(txt)
+          .map(m => """"(q\w+)":"([^"]*)"""".r.findAllMatchIn(m.group(1))
+            .map(x => x.group(1) -> x.group(2)).toMap)
+          .getOrElse(Map.empty[String, String])
+          .filter { case (k, _) => all.contains(k) }
+      }
     // Interference normalization. Two estimators of "how much slower is
     // this run's environment than the conditions the minima were recorded
     // under", and the bar relaxes by the LARGER of the two:
@@ -238,7 +205,7 @@ object Bench {
     //      probe factor; reported in the artifact as median_ratio.
     lazy val medianRatio: Double = {
       val ratios = resultsMin2.flatMap { case (k, v) =>
-        prevByName.get(k).filter(_ > 0).filter(_ => v > 0).map(p => v / p)
+        prev.get(k).filter(_ > 0).filter(_ => v > 0).map(p => v / p)
       }.sorted
       // a narrowed local run has too few ratios for a meaningful median —
       // and a 1-query subset's median IS that query, which must not
@@ -259,11 +226,11 @@ object Bench {
     // (sub-second queries live inside scheduler noise — a 0.2s -> 0.45s
     // move is not signal) and the one-shot rebaseline markers (design
     // changes that intentionally moved a query's floor)
-    def flagged(k: String, v: Double): Boolean = prevByName.get(k) match {
+    def flagged(k: String, v: Double): Boolean = prev.get(k) match {
       case Some(p0) =>
         val p = p0 * hostFactor
         p0 > 0 && v > 0 && v > p * 1.5 && v - p > 0.5 &&
-          !rebaseline.contains(qk(k))
+          !rebaseline.contains(k)
       case None => false
     }
     // Best-of-three ONLY for queries the guard would flag: one extra
@@ -280,20 +247,20 @@ object Bench {
     }
     val regressions = results.flatMap { case (k, v) =>
       if (flagged(k, v)) {
-        val p = prevByName(k) * hostFactor
+        val p = prev(k) * hostFactor
         System.err.println(
-          f"[bench] REGRESSION ${qk(k)}: $p%.3fs (host-normalized) -> $v%.3fs (${v / p}%.2fx)")
-        Some(qk(k))
+          f"[bench] REGRESSION $k: $p%.3fs (host-normalized) -> $v%.3fs (${v / p}%.2fx)")
+        Some(k)
       } else None
     }
 
     val total = results.map(_._2).filter(_ >= 0).sum
-    val qsVerbose = results.map { case (k, v) => "\"" + qk(k) + "\":" + ms(v) }
+    val qsVerbose = results.map { case (k, v) => "\"" + k + "\":" + ms(v) }
       .mkString("{", ",", "}")
     // Verbose artifact (qN keys, seconds, regression list) for in-repo
     // trend tracking; the stdout line is the driver-facing compact form.
     val verbose = results.map { case (k, v) =>
-      "\"" + qk(k) + "\":" + (if (v < 0) "-1" else f"$v%.3f")
+      "\"" + k + "\":" + (if (v < 0) "-1" else f"$v%.3f")
     }.mkString("{", ",", "}")
     val regJson = regressions.map("\"" + _ + "\"").mkString("[", ",", "]")
     // only a FULL-suite run may rewrite the baseline: a prefix-narrowed
@@ -307,13 +274,13 @@ object Bench {
     // the next run is otherwise intentional signal, not noise.
     if (args.isEmpty) {
       val best: Map[String, Double] = results.map { case (k, v) =>
-        val merged = (prevByName.get(k), v) match {
+        val merged = (prev.get(k), v) match {
           // a consumed rebaseline marker REPLACES the stored best with this
           // run's measurement — the honest floor for the new design
-          case (_, cur) if cur > 0 && rebaseline.contains(qk(k)) =>
-            System.err.println(f"[bench] REBASELINE ${qk(k)}: " +
-              f"${prevByName.getOrElse(k, -1.0)}%.3fs -> $cur%.3fs " +
-              f"(${rebaseline(qk(k))})")
+          case (_, cur) if cur > 0 && rebaseline.contains(k) =>
+            System.err.println(f"[bench] REBASELINE $k: " +
+              f"${prev.getOrElse(k, -1.0)}%.3fs -> $cur%.3fs " +
+              f"(${rebaseline(k)})")
             cur
           case (Some(p), cur) if p > 0 && cur > 0 => math.min(p, cur)
           // a transient failure (-1) must NOT clobber a known-good best —
@@ -321,11 +288,11 @@ object Bench {
           case (Some(p), cur) if p > 0 && cur <= 0 => p
           case (_, cur) => cur
         }
-        qk(k) -> merged
+        k -> merged
       }.toMap
       val rebasedJson = results.flatMap { case (k, v) =>
-        if (v > 0 && rebaseline.contains(qk(k)))
-          Some("\"" + qk(k) + "\":\"" + rebaseline(qk(k)) + "\"")
+        if (v > 0 && rebaseline.contains(k))
+          Some("\"" + k + "\":\"" + rebaseline(k) + "\"")
         else None
       }.mkString("{", ",", "}")
       // markers whose query FAILED this round (cur = -1) were not consumed
@@ -333,16 +300,16 @@ object Bench {
       // back under "rebaseline" so the next successful full run can
       // consume them instead of dropping the marker and flagging forever
       val consumed = results.collect {
-        case (k, v) if v > 0 && rebaseline.contains(qk(k)) => qk(k)
+        case (k, v) if v > 0 && rebaseline.contains(k) => k
       }.toSet
       val carriedJson = (rebaseline -- consumed).map { case (q, why) =>
         "\"" + q + "\":\"" + why + "\""
       }.mkString("{", ",", "}")
-      val bestMs = results.map { case (k, _) => "\"" + qk(k) + "\":" + ms(best(qk(k))) }
+      val bestMs = results.map { case (k, _) => "\"" + k + "\":" + ms(best(k)) }
         .mkString("{", ",", "}")
       val bestSec = results.map { case (k, _) =>
-        val v = best(qk(k))
-        "\"" + qk(k) + "\":" + (if (v < 0) "-1" else f"$v%.3f")
+        val v = best(k)
+        "\"" + k + "\":" + (if (v < 0) "-1" else f"$v%.3f")
       }.mkString("{", ",", "}")
       // calib_ms: the MIN of stored and current — best-known host speed,
       // same ratchet direction as the per-query minima it normalizes. On
@@ -355,7 +322,7 @@ object Bench {
       // run — the instrument for separating real plan regressions from
       // collector interference when a query sits >2× its best-known
       val gcJson = results.map { case (k, _) =>
-        "\"" + qk(k) + "\":" + gcOfMin.getOrElse(k, 0L)
+        "\"" + k + "\":" + gcOfMin.getOrElse(k, 0L)
       }.mkString("{", ",", "}")
       // "rebaselined" records markers THIS run consumed (audit trail);
       // "rebaseline" carries forward only UNCONSUMED markers (failed

@@ -181,26 +181,15 @@ object BenchScale {
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "target/scale_sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.cpus(32))
 
     if (!new java.io.File(s"$outDir/_GRAFT_MATERIALIZED").exists()) {
       System.err.println(s"[bench-sf1] materializing ${factor}x of $srcDir -> $outDir")
       materialize(spark, srcDir, outDir, factor)
     }
 
-    // sf0.1 best-knowns for the linear-extrapolation denominator.
-    // BENCH_LOCAL.json keys by full query name since the r14 tracker fix;
-    // a legacy short-keyed ("qN") file still resolves via the numeric
-    // prefix as long as it is unambiguous.
+    // sf0.1 best-knowns (keyed by full query name) for the
+    // linear-extrapolation denominator
     val sf01Raw: Map[String, Double] = {
       val txt = scala.io.Source.fromFile("BENCH_LOCAL.json").mkString
       val msObj = """"queries_ms":\{([^}]*)\}""".r
@@ -208,12 +197,9 @@ object BenchScale {
       """"(q\w+)":(-?\d+)""".r.findAllMatchIn(msObj)
         .map(m => m.group(1) -> m.group(2).toDouble / 1000.0).toMap
     }
-    def shortKey(k: String): String =
-      "q" + k.takeWhile(_ != '_').dropWhile(!_.isDigit).toInt
-    def sf01Best(name: String): Double =
-      sf01Raw.getOrElse(name, sf01Raw.getOrElse(shortKey(name), -1.0))
     // note keys stay numeric-prefix shorthand (unique within the spot set)
-    def qk(k: String): String = shortKey(k)
+    def qk(k: String): String =
+      "q" + k.takeWhile(_ != '_').dropWhile(!_.isDigit).toInt
 
     def dropAllBlocks(): Unit = {
       spark.catalog.clearCache()
@@ -252,10 +238,7 @@ object BenchScale {
             """"vs_linear":(-?[\d.]+|"[^"]*")""").r
         val byKey = row.findAllMatchIn(txt).map(m =>
           m.group(1) -> ((m.group(2), m.group(3), m.group(4)))).toMap
-        // legacy short keys resolve via unique numeric prefix
-        spotQueries.flatMap { n =>
-          byKey.get(n).orElse(byKey.get(qk(n))).map(n -> _)
-        }.toMap
+        spotQueries.flatMap(n => byKey.get(n).map(n -> _)).toMap
       }
     }
     // one warm pass (unmeasured), then min-of-2
@@ -336,7 +319,7 @@ object BenchScale {
           "\"" + n + "\":{\"sec\":" + sec + ",\"sf01_best_sec\":" + best +
             ",\"vs_linear\":" + vsl + note + "}")
       } else {
-        val best = sf01Best(n)
+        val best = sf01Raw.getOrElse(n, -1.0)
         val vsLinear =
           if (v > 0 && best > 0) f"${v / (best * factor)}%.3f" else "-1"
         Some((n, v,

@@ -6294,11 +6294,6 @@ object SparkEntry {
     s.table(name)
   }
 
-  /** Exact shingle-Jaccard pairs in DuckDB — the oracle for every
-    * LSH-candidate + exact-verify dedup operator (q20 ngramJaccard exact
-    * recall by construction; q25 minhash / q26 simhash candidate nets are
-    * empirically 100%-recall on this corpus at oracle scale, so their
-    * verified outputs equal the exact pair set). */
   /** q70/q184 oracle: exact cross-parity Jaccard (odd = new batch, even =
     * historical corpus); recall argument as q25 — banding is a per-row
     * projection, so the cross-parity candidate net is the q25 net
@@ -6320,6 +6315,11 @@ object SparkEntry {
              / len(list_distinct(list_concat(a.sh, b.sh)))::DOUBLE >= 0.7
          ORDER BY new_id, corpus_id"""
 
+  /** Exact shingle-Jaccard pairs in DuckDB — the oracle for every
+    * LSH-candidate + exact-verify dedup operator (q20 ngramJaccard exact
+    * recall by construction; q25 minhash / q26 simhash candidate nets are
+    * empirically 100%-recall on this corpus at oracle scale, so their
+    * verified outputs equal the exact pair set). */
   private def jaccardPairsSql(threshold: Double): String =
     s"""WITH t AS (
            SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
@@ -6337,10 +6337,6 @@ object SparkEntry {
              / len(list_distinct(list_concat(a.sh, b.sh)))::DOUBLE >= $threshold
          ORDER BY id_a, id_b"""
 
-  /** Exact brute-force cosine top-5 in DuckDB — the oracle for every ANN
-    * operator whose output provably equals exact search: q21 (brute force
-    * by definition), q29 (LSH net verified 100%-recall at oracle scale),
-    * q40 (IVF with nProbe = numLists probes every list). */
   /** q17/q154 oracle: the exact numeric profile re-derived per column. */
   private lazy val profileStatsSql: String = {
     def block(c: String) =
@@ -6387,6 +6383,10 @@ object SparkEntry {
          count(*) AS n_events, round(sum(value), 2) AS session_value
        FROM s GROUP BY user_id, sid ORDER BY user_id, session_start"""
 
+  /** Exact brute-force cosine top-5 in DuckDB — the oracle for every ANN
+    * operator whose output provably equals exact search: q21 (brute force
+    * by definition), q29 (LSH net verified 100%-recall at oracle scale),
+    * q40 (IVF with nProbe = numLists probes every list). */
   private val knnExactSql: String =
     """SELECT query_id, nbr_id, round(cos, 4) AS cosine, rank FROM (
            SELECT q.vec_id AS query_id, c.vec_id AS nbr_id,
@@ -6397,16 +6397,6 @@ object SparkEntry {
            FROM embeddings c CROSS JOIN (SELECT * FROM embeddings WHERE vec_id < 10) q) t
          WHERE rank <= 5 ORDER BY query_id, rank"""
 
-  /** q179 oracle: one Lloyd step replayed exactly — unrolled left-to-right
-    * squared-L2 terms (matching the Spark expression's fold order),
-    * row_number ties to the lowest cluster index (≡ the struct array_min),
-    * DECIMAL-exact per-dimension sums divided once in double, and the
-    * empty-cluster fallback to the PREVIOUS centroid (kmeansLloyd's
-    * contract). The coalesce below writes that fallback against the SEED
-    * centroids c0 — correct ONLY because this oracle replays exactly one
-    * iteration, where previous ≡ seed. A multi-iteration replay must
-    * coalesce each round against the prior round's cc CTE instead, or it
-    * silently diverges from kmeansLloyd on the first empty cluster. */
   /** The q179 one-Lloyd-iteration CTE chain (ends at `a2`, the final
     * assignment) — shared by [[kmeansSql]] and [[silhouetteSql]]. */
   private def kmeansCtes(k: Int, dims: Int): String = {
@@ -6437,6 +6427,16 @@ object SparkEntry {
                WHERE rn = 1)"""
   }
 
+  /** q179 oracle: one Lloyd step replayed exactly — unrolled left-to-right
+    * squared-L2 terms (matching the Spark expression's fold order),
+    * row_number ties to the lowest cluster index (≡ the struct array_min),
+    * DECIMAL-exact per-dimension sums divided once in double, and the
+    * empty-cluster fallback to the PREVIOUS centroid (kmeansLloyd's
+    * contract). The coalesce in [[kmeansCtes]] writes that fallback
+    * against the SEED centroids c0 — correct ONLY because this oracle replays exactly one
+    * iteration, where previous ≡ seed. A multi-iteration replay must
+    * coalesce each round against the prior round's cc CTE instead, or it
+    * silently diverges from kmeansLloyd on the first empty cluster. */
   private def kmeansSql(k: Int, dims: Int): String =
     s"""WITH ${kmeansCtes(k, dims)}
         SELECT id AS vec_id, cluster FROM a2 ORDER BY vec_id"""

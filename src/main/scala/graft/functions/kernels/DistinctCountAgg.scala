@@ -159,6 +159,11 @@ case class DistinctCountAgg(
 
   override def eval(buf: Hash128Set): Any = buf.size.toLong
 
+  /** Byte order is instance-dependent by design: `foreachPair` walks the
+    * slot layout, which the per-instance probe seed moves, so a retried
+    * task can ship different bytes for the same logical partial. Safe
+    * because the only consumer is [[merge]], a commutative set union —
+    * the pair set and the count are identical in any order. */
   override def serialize(buf: Hash128Set): Array[Byte] = {
     val bytesNeeded = 4L + 16L * buf.size
     if (bytesNeeded > Int.MaxValue - 8)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.kernels.{FunnelAdvanceTs, FunnelDepth, FunnelDepthWithin}
+import graft.ops.ScaleOps.cutLineage
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -538,7 +539,7 @@ object Behavior {
     * ambiguity). No global window; nothing after the first aggregation
     * is user-sized. */
   def kmSurvival(events: DataFrame, userCol: String, tsCol: String,
-      censorDays: Int = 7, reliable: Boolean = false): DataFrame = {
+      censorDays: Int = 7): DataFrame = {
     require(censorDays >= 0, s"censorDays must be >= 0: $censorDays")
     val perUser = events
       .filter(col(userCol).isNotNull && col(tsCol).isNotNull)
@@ -550,18 +551,10 @@ object Behavior {
       .select(datediff(col("__last"), col("__first")).cast("long")
           .as("duration"),
         (datediff(col("__hmax"), col("__last")) < censorDays).as("censored"))
-    kmCurve(durations, "duration", "censored", reliable)
+    kmCurve(durations, "duration", "censored")
       .withColumnRenamed("duration", "lifetime_days")
   }
 
-  /** Generic Kaplan–Meier estimator over a DURATIONS frame — one row per
-    * subject with an integer `durationCol` (days, hours, any unit) and a
-    * boolean `censoredCol` (true = the event was NOT observed; the
-    * duration is a lower bound). [[kmSurvival]] is the events-table
-    * convenience over this; any time-to-event question (time to first
-    * purchase, time to churn, label latency) reduces to building the
-    * durations frame and calling this. Output and scale shape as
-    * documented on [[kmSurvival]]. */
   /** Two-group log-rank test — DO the survival curves differ ([[kmCurve]]
     * draws them; log-rank is the significance test every KM plot quotes):
     * at each event time, compare group A's observed events to the
@@ -576,8 +569,7 @@ object Behavior {
     * distinct-duration counts, ONE multi-column deterministic-bucket
     * cumsum, one scalar reduce over event times. */
   def logRankTest(durations: DataFrame, durationCol: String,
-      censoredCol: String, groupCol: String,
-      reliable: Boolean = false): DataFrame = {
+      censoredCol: String, groupCol: String): DataFrame = {
     val base = durations
       .filter(col(durationCol).isNotNull && col(groupCol).isNotNull)
       .select(col(groupCol).cast("string").as("g"),
@@ -587,9 +579,7 @@ object Behavior {
     // table ([[rmst]]'s chain discipline): the group collect and the
     // per-duration pivot both derive from the checkpointed cells instead
     // of re-scanning subjects, and the shared range splits feed the cumsum
-    def cp(df: DataFrame): DataFrame =
-      graft.ops.ScaleOps.cutLineageBounded(df, reliable)
-    val cells = cp(base.groupBy(col("life"), col("g"))
+    val cells = cutLineage(base.groupBy(col("life"), col("g"))
       .agg(sum(when(!col("__cens"), 1L).otherwise(0L)).as("__d"),
         count(lit(1)).as("__all")))
     val groups = cells.select(col("g")).distinct().orderBy(col("g"))
@@ -597,7 +587,7 @@ object Behavior {
     require(groups.length == 2,
       s"log-rank needs exactly 2 groups, got ${groups.toSeq}")
     val (ga, gb) = (groups(0), groups(1))
-    val byLife = cp(cells.groupBy(col("life")).agg(
+    val byLife = cutLineage(cells.groupBy(col("life")).agg(
       sum(when(col("g") === ga, col("__d")).otherwise(0L)).as("da"),
       sum(when(col("g") === gb, col("__d")).otherwise(0L)).as("db"),
       sum(when(col("g") === ga, col("__all")).otherwise(0L)).as("alla"),
@@ -642,19 +632,24 @@ object Behavior {
       chi2.map(lit(_).cast("double")).getOrElse(dNull).as("chi2"))
   }
 
+  /** Generic Kaplan–Meier estimator over a DURATIONS frame — one row per
+    * subject with an integer `durationCol` (days, hours, any unit) and a
+    * boolean `censoredCol` (true = the event was NOT observed; the
+    * duration is a lower bound). [[kmSurvival]] is the events-table
+    * convenience over this; any time-to-event question (time to first
+    * purchase, time to churn, label latency) reduces to building the
+    * durations frame and calling this. Output and scale shape as
+    * documented on [[kmSurvival]]. */
   def kmCurve(durations: DataFrame, durationCol: String,
-      censoredCol: String, reliable: Boolean = false): DataFrame = {
+      censoredCol: String): DataFrame = {
     // The [[rmst]] chain discipline: the per-distinct-duration spine is
     // calendar-bounded, so it (and the cumsum-1 output below) checkpoints —
     // without the cuts, each chained cumsum's splits/totals pass replayed
     // the whole subject-table aggregation again (measured at sf0.1: the
     // byLife aggregation ran ~5× per curve), and the range splits over
     // `life` compute once and feed both cumsums (same order column, same
-    // spine rows). `reliable` swaps the local checkpoint for a durable one
-    // on a real cluster.
-    def cp(df: DataFrame): DataFrame =
-      graft.ops.ScaleOps.cutLineageBounded(df, reliable)
-    val byLife = cp(durations
+    // spine rows).
+    val byLife = cutLineage(durations
       .filter(col(durationCol).isNotNull)
       .select(col(durationCol).cast("long").as("life"),
         coalesce(col(censoredCol), lit(false)).as("__cens"))
@@ -672,7 +667,7 @@ object Behavior {
     // ln(1 − d/n_risk): d = n_risk only at the terminal lifetime where
     // everyone remaining churns — survival is exactly 0 there, flagged and
     // excluded from the log (ln(0) is undefined under ANSI)
-    val withTerm = cp(cum1
+    val withTerm = cutLineage(cum1
       .withColumn("__nRisk", nRisk)
       .withColumn("__dead", col("d") === col("__nRisk"))
       .withColumn("__lnTerm",
@@ -716,14 +711,11 @@ object Behavior {
     * pass as the ln-survival prefix (one more long column, no extra
     * shuffle), so both engines exponentiate identical doubles. */
   def kmCurveCI(durations: DataFrame, durationCol: String,
-      censoredCol: String, z: Double = 1.959964,
-      reliable: Boolean = false): DataFrame = {
+      censoredCol: String, z: Double = 1.959964): DataFrame = {
     require(z > 0, s"z must be > 0: $z")
     // checkpointed calendar-bounded spine + shared splits — the [[kmCurve]]
     // chain discipline (see the note there)
-    def cp(df: DataFrame): DataFrame =
-      graft.ops.ScaleOps.cutLineageBounded(df, reliable)
-    val byLife = cp(durations
+    val byLife = cutLineage(durations
       .filter(col(durationCol).isNotNull)
       .select(col(durationCol).cast("long").as("life"),
         coalesce(col(censoredCol), lit(false)).as("__cens"))
@@ -739,7 +731,7 @@ object Behavior {
     val nRisk = lit(n) - col("__exitsBefore")
     val dD = col("d").cast("double")
     val nrD = nRisk.cast("double")
-    val withTerm = cp(cum1
+    val withTerm = cutLineage(cum1
       .withColumn("__nRisk", nRisk)
       .withColumn("__dead", col("d") === col("__nRisk"))
       .withColumn("__lnQ",
@@ -788,12 +780,10 @@ object Behavior {
     * the hazard and its variance ride ONE two-column fixed-point (12 dp)
     * cumsum pass; no global window, no sort. */
   def naCurve(durations: DataFrame, durationCol: String,
-      censoredCol: String, reliable: Boolean = false): DataFrame = {
+      censoredCol: String): DataFrame = {
     // checkpointed calendar-bounded spine + shared splits — the [[kmCurve]]
     // chain discipline (see the note there)
-    def cp(df: DataFrame): DataFrame =
-      graft.ops.ScaleOps.cutLineageBounded(df, reliable)
-    val byLife = cp(durations
+    val byLife = cutLineage(durations
       .filter(col(durationCol).isNotNull)
       .select(col(durationCol).cast("long").as("life"),
         coalesce(col(censoredCol), lit(false)).as("__cens"))
@@ -806,7 +796,7 @@ object Behavior {
       byLife, col("life"), Seq("all"), Seq("__exitsBefore"),
       splitsHint = lifeSplits, persistInput = false)
     val n = grand.head
-    val withTerms = cp(cum1
+    val withTerms = cutLineage(cum1
       .withColumn("__nRisk", lit(n) - col("__exitsBefore"))
       .withColumn("__hQ", round(col("d").cast("double") / col("__nRisk")
         * 1e12, 0).cast("long"))
@@ -865,7 +855,7 @@ object Behavior {
     * (at-risk, ln-survival, area), one single-row final aggregate. No
     * unkeyed window, no data-sized driver state. */
   def rmst(durations: DataFrame, durationCol: String, censoredCol: String,
-      groupCol: String, tau: Long, reliable: Boolean = false): DataFrame = {
+      groupCol: String, tau: Long): DataFrame = {
     require(tau > 0, s"tau must be > 0: $tau")
     // Long-headroom fail-stop for the fixed quantization scales: the
     // variance terms quantize area²·w at 9 dp (area ≤ τ, w < 1), so a
@@ -893,11 +883,8 @@ object Behavior {
     // totals pass and every AQE stage of the replay ran as its own job
     // (measured 61 sequential jobs at sf0.1). The range splits over
     // `life` compute once and feed all three cumsums (same order column,
-    // same spine rows). `reliable` swaps the local checkpoints for durable
-    // ones on a real cluster (executor loss cannot brick the chain).
-    def cp(df: DataFrame): DataFrame =
-      graft.ops.ScaleOps.cutLineageBounded(df, reliable)
-    val cells = cp(base.groupBy(col("life"), col("g"))
+    // same spine rows).
+    val cells = cutLineage(base.groupBy(col("life"), col("g"))
       .agg(count(lit(1)).as("__c"),
         sum(when(!col("__cens"), 1L).otherwise(0L)).as("__dc")))
     val groups = cells.select(col("g")).distinct().orderBy(col("g"))
@@ -910,7 +897,7 @@ object Behavior {
         .as(s"__d$i"),
       sum(when(col("g") === groups(i), col("__c")).otherwise(0L))
         .as(s"__all$i")))
-    val byLife = cp(cells.groupBy(col("life"))
+    val byLife = cutLineage(cells.groupBy(col("life"))
       .agg(pivots.head, pivots.tail: _*))
     graft.ops.ScaleOps.releaseCheckpointBlocks(cells)
     val lifeSplits = Some(graft.ops.ScaleOps.rangeSplits(byLife, col("life")))
@@ -918,7 +905,7 @@ object Behavior {
     val (cum1, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
       byLife, col("life"), gi.map(i => s"__all$i"), gi.map(i => s"__b$i"),
       splitsHint = lifeSplits, persistInput = false)
-    val withLn = cp(gi.foldLeft(cum1) { (df, i) =>
+    val withLn = cutLineage(gi.foldLeft(cum1) { (df, i) =>
       val nRisk = lit(grand(i)) - col(s"__b$i")
       val d = col(s"__d$i").cast("double")
       df.withColumn(s"__nr$i", nRisk)
@@ -933,7 +920,7 @@ object Behavior {
     val cum2 = graft.ops.ScaleOps.withExclusiveRunningSums(
       withLn, col("life"), gi.map(i => s"__lnQ$i"), gi.map(i => s"__lb$i"),
       splitsHint = lifeSplits, persistInput = false)._1
-    val withDrop = cp(gi.foldLeft(cum2) { (df, i) =>
+    val withDrop = cutLineage(gi.foldLeft(cum2) { (df, i) =>
       val sBef = exp(col(s"__lb$i").cast("double") / 1e12)
       val s = when(col(s"__dead$i"), lit(0.0)).otherwise(
         exp((col(s"__lb$i") + col(s"__lnQ$i")).cast("double") / 1e12))
@@ -1008,7 +995,7 @@ object Behavior {
     * τ-filtered aggregate. No unkeyed window, no data-sized driver
     * state. */
   def cumulativeIncidence(durations: DataFrame, durationCol: String,
-      eventCol: String, tau: Long, reliable: Boolean = false): DataFrame = {
+      eventCol: String, tau: Long): DataFrame = {
     require(tau > 0, s"tau must be > 0: $tau")
     val base = durations
       .filter(col(durationCol).isNotNull)
@@ -1019,10 +1006,8 @@ object Behavior {
     // the pivoted spine both derive from the (life, type) cell table,
     // and without the lineage cuts each chained cumsum replayed the
     // whole deepening plan for its totals pass (measured 49 sequential
-    // jobs at sf0.1); `reliable` swaps local checkpoints for durable ones
-    def cp(df: DataFrame): DataFrame =
-      graft.ops.ScaleOps.cutLineageBounded(df, reliable)
-    val cells = cp(base.groupBy(col("life"), col("__k"))
+    // jobs at sf0.1)
+    val cells = cutLineage(base.groupBy(col("life"), col("__k"))
       .agg(count(lit(1)).as("__c")))
     val types = cells.filter(col("__k").isNotNull)
       .select(col("__k")).distinct().orderBy(col("__k"))
@@ -1035,7 +1020,7 @@ object Behavior {
       sum(col("__c")).as("__all") +:
       ti.map(i => sum(when(col("__k") === types(i), col("__c"))
         .otherwise(0L)).as(s"__d$i")))
-    val byLife = cp(cells.groupBy(col("life"))
+    val byLife = cutLineage(cells.groupBy(col("life"))
       .agg(pivots.head, pivots.tail: _*))
     graft.ops.ScaleOps.releaseCheckpointBlocks(cells)
     val lifeSplits = Some(graft.ops.ScaleOps.rangeSplits(byLife, col("life")))
@@ -1044,7 +1029,7 @@ object Behavior {
       byLife, col("life"), Seq("__all"), Seq("__b"),
       splitsHint = lifeSplits, persistInput = false)
     val nTotal = grand(0)
-    val withLn = cp {
+    val withLn = cutLineage {
       val nRisk = lit(nTotal) - col("__b")
       val d = col("__dall").cast("double")
       cum1.withColumn("__nr", nRisk)
@@ -1271,28 +1256,26 @@ object Behavior {
     * (one codegen compile per shape, not per Newton pass). */
   def weibullAft(durations: DataFrame, durationCol: String,
       censoredCol: String, covariates: Seq[String],
-      iterations: Int = 40, reliable: Boolean = false): DataFrame = {
+      iterations: Int = 40): DataFrame = {
     require(covariates.nonEmpty && covariates.size <= 6,
       s"weibullAft needs 1..6 covariates, got ${covariates.size}")
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
     val d = covariates.size
     val terms = ("intercept" +: covariates) :+ "ln_scale"
     val xCols = covariates.indices.map(i => s"__x$i")
-    // materialize ONCE with the lineage CUT (localCheckpoint, the kCore /
-    // cumsum convention) rather than persist: ~35 Newton passes each
+    // materialize ONCE with the lineage CUT (ScaleOps.cutLineage, the
+    // kCore / cumsum convention) rather than persist: ~35 Newton passes each
     // re-analyze the frame's logical plan, and over the raw upstream tree
     // (scan → groupBy → crossJoin → …) that planning overhead dominated
     // the per-pass cost at bench scale; over a LogicalRDD leaf it is nil.
-    // The blocks release in the finally through the registry sweep;
-    // `reliable` swaps in a durable checkpoint (this base is data-sized,
-    // so executor loss under localCheckpoint fails the whole fit).
-    val base = graft.ops.ScaleOps.cutLineageBounded(durations
+    // The blocks release in the finally through the registry sweep.
+    val base = cutLineage(durations
       .filter(col(durationCol).isNotNull && col(censoredCol).isNotNull &&
         covariates.map(col(_).isNotNull).reduce(_ && _))
       .select((col(durationCol).cast("long").as("__t") +:
         (lit(1L) - col(censoredCol).cast("long")).as("__d") +:
         covariates.zipWithIndex.map { case (c, i) =>
-          col(c).cast("decimal(8,4)").as(xCols(i)) }): _*), reliable)
+          col(c).cast("decimal(8,4)").as(xCols(i)) }): _*))
     try graft.ops.ParamFrame.withFixedPlan(durations.sparkSession) {
       val spark = durations.sparkSession
       import spark.implicits._

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.ops.ScaleOps.{cutLineage, releaseCheckpointBlocks}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -16,25 +17,13 @@ import org.apache.spark.storage.StorageLevel
   *    singleton components with no shuffle of labels.
   *  - convergence needs O(component diameter) rounds; near-dup clusters
   *    are shallow (pairs chain through shared shingles), so single-digit
-  *    rounds in practice. Each round persists its labels and unpersists
-  *    the previous, with `localCheckpoint` cutting the lineage so plan
-  *    depth stays constant.
+  *    rounds in practice. Each round checkpoints its labels and releases
+  *    the previous round's, with [[graft.ops.ScaleOps.cutLineage]]
+  *    cutting the lineage so plan depth stays constant.
   *  - a non-converged run THROWS rather than returning partial labels.
   */
 object Components {
 
-  /** Connected components of the undirected graph `edges` (`id_a`,`id_b`)
-    * over `vertices` (single column `id`). Output: `(id, component)` where
-    * `component` is the smallest id in the vertex's component; vertices
-    * with no edges are their own component.
-    *
-    * Per round: ONE checkpoint job materializes the new labels (with a
-    * per-row `changed` flag folded into the same projection), plus one
-    * cheap `isEmpty` probe over the just-cached blocks — no separate
-    * old-vs-new join. Each round releases the previous round's checkpoint
-    * blocks; `sym`/`touched` are released in a finally (the
-    * non-convergence throw included). Only the FINAL labels checkpoint
-    * stays cached — the returned plan reads from it. */
   /** PageRank over the undirected graph `edges` (`id_a`, `id_b`) on
     * `vertices` (single column `id`) — the authority score for near-dup
     * graphs: within a duplicate cluster, high-rank nodes are the "hub"
@@ -58,11 +47,9 @@ object Components {
     * iteration's rank is rounded to 12 dp. An engine replaying the recipe
     * reproduces every rank bit-for-bit. */
   def pageRank(vertices: DataFrame, edges: DataFrame,
-      iterations: Int = 2, damping: Double = 0.85,
-      checkpointDir: Option[String] = None): DataFrame = {
+      iterations: Int = 2, damping: Double = 0.85): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
     require(damping > 0.0 && damping < 1.0, s"damping must be in (0,1): $damping")
-    checkpointDir.foreach(vertices.sparkSession.sparkContext.setCheckpointDir)
     val v = vertices.select(col("id"))
     val n = v.count()
     require(n > 0, "pageRank needs at least one vertex")
@@ -84,12 +71,12 @@ object Components {
         val next = cutLineage(v.join(contrib, Seq("id"), "left")
           .select(col("id"),
             round(lit(base) + lit(damping) * coalesce(col("in_sum"), lit(0.0)), 12)
-              .as("rank")), checkpointDir.isDefined)
+              .as("rank")))
         // `next` is materialized eagerly above, so the previous iteration's
         // cached blocks are no longer referenced — release them now instead
         // of letting one checkpoint per iteration accumulate for the job's
         // lifetime (no-op on the first, un-checkpointed ranks frame)
-        releaseCheckpoint(ranks)
+        releaseCheckpointBlocks(ranks)
         ranks = next
       }
       ranks.select(col("id"), round(col("rank"), 6).as("rank"))
@@ -142,10 +129,21 @@ object Components {
             lit(2.0) * col("n_triangles") / (col("degree") * (col("degree") - 1)), 6)))
   }
 
+  /** Connected components of the undirected graph `edges` (`id_a`,`id_b`)
+    * over `vertices` (single column `id`). Output: `(id, component)` where
+    * `component` is the smallest id in the vertex's component; vertices
+    * with no edges are their own component.
+    *
+    * Per round: ONE checkpoint job materializes the new labels (with a
+    * per-row `changed` flag folded into the same projection), plus one
+    * cheap `isEmpty` probe over the just-cached blocks — no separate
+    * old-vs-new join. Each round releases the previous round's checkpoint
+    * blocks; `sym`/`touched` are released in a finally (the
+    * non-convergence throw included). Only the FINAL labels checkpoint
+    * stays cached — the returned plan reads from it. */
   def connectedComponents(vertices: DataFrame, edges: DataFrame,
-      maxIter: Int = 25, checkpointDir: Option[String] = None): DataFrame = {
+      maxIter: Int = 25): DataFrame = {
     require(maxIter >= 1, s"maxIter must be >= 1: $maxIter")
-    checkpointDir.foreach(vertices.sparkSession.sparkContext.setCheckpointDir)
     val sym0 = edges.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(edges.select(col("id_b").as("src"), col("id_a").as("dst")))
       .distinct()
@@ -168,8 +166,7 @@ object Components {
 
     try {
       var labels = cutLineage(
-        touched.select(col("id"), col("id").as("component")),
-        checkpointDir.isDefined)
+        touched.select(col("id"), col("id").as("component")))
       var converged = false
       var iter = 0
       while (!converged && iter < maxIter) {
@@ -183,10 +180,9 @@ object Components {
               least(col("component"), coalesce(col("nbr_comp"), col("component")))
                 .as("component"),
               (coalesce(col("nbr_comp"), col("component")) < col("component"))
-                .as("__chg")),
-          checkpointDir.isDefined) // materializes AND cuts lineage
+                .as("__chg"))) // materializes AND cuts lineage
         converged = next.filter(col("__chg")).isEmpty
-        releaseCheckpoint(labels)
+        releaseCheckpointBlocks(labels)
         labels = next.drop("__chg")
         iter += 1
       }
@@ -203,29 +199,4 @@ object Components {
       sym0.unpersist(); touched0.unpersist()
     }
   }
-
-  /** Materialize `df` eagerly and cut its lineage so iterative plan depth
-    * stays constant. `reliable = false` (local mode default) uses
-    * `localCheckpoint(true)`: blocks live on executors with lineage
-    * truncated — fast, but one executor loss mid-iteration kills the job
-    * unrecoverably. `reliable = true` writes a durable checkpoint to the
-    * directory previously registered via `setCheckpointDir`
-    * (`Dataset.checkpoint`): files survive executor loss — the required
-    * mode for long iterative jobs on a real cluster. */
-  private def cutLineage(df: DataFrame, reliable: Boolean): DataFrame =
-    if (reliable) df.checkpoint(eager = true)
-    // registered so the PUBLIC releaseCheckpointBlocks can release the
-    // final returned frame; intermediate iterations self-release via
-    // releaseCheckpoint below (stale registered ids are harmless — RDD
-    // ids are never reused within a SparkContext)
-    else graft.ops.ScaleOps.registerInternalCheckpoint(df.localCheckpoint(true))
-
-  /** Release the cached blocks behind a `localCheckpoint(true)` DataFrame.
-    * Routed through the public registry-scoped release so the iteration's
-    * id is also DEREGISTERED (a raw per-leaf unpersist would leave one
-    * stale id per iteration accumulating toward the registry bound).
-    * No-op for reliable checkpoints (their data is files, not blocks) and
-    * for never-checkpointed frames (no `LogicalRDD` leaf). */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    graft.ops.ScaleOps.releaseCheckpointBlocks(df)
 }

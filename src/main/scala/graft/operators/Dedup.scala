@@ -415,15 +415,15 @@ object Dedup {
   }
 
   /** With `materialize` set: evaluate the (small) result into a
-    * lineage-free local checkpoint and release the operator's base cache(s)
-    * before returning — the eager-release mode for long-lived apps. The
-    * default lazy mode returns the plan untouched. */
+    * lineage-free checkpoint ([[graft.ops.ScaleOps.cutLineage]]) and
+    * release the operator's base cache(s) before returning — the
+    * eager-release mode for long-lived apps. The default lazy mode
+    * returns the plan untouched. */
   private def released(result: DataFrame, bases: Seq[DataFrame],
       materialize: Boolean): DataFrame =
     if (!materialize) result
     else {
-      val out = graft.ops.ScaleOps.registerInternalCheckpoint(
-        result.localCheckpoint(true))
+      val out = graft.ops.ScaleOps.cutLineage(result)
       bases.foreach(graft.ops.ScaleOps.deregisterInternalPersist)
       out
     }

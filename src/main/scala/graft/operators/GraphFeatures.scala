@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.ops.ScaleOps.{cutLineage, releaseCheckpointBlocks}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -50,10 +51,10 @@ object GraphFeatures {
     * list is distinct, so the running degree is exactly the degree within
     * the surviving subgraph — the same alive-set sequence, the same
     * fixpoint (the k-core is removal-order independent). Each round
-    * localCheckpoints the degree table (or durably checkpoints with
-    * `reliable = true` on a real cluster) so plan depth stays constant,
-    * and releases the previous round's blocks. Peeling depth is the
-    * cascade length — single digits on natural graphs.
+    * checkpoints the degree table ([[graft.ops.ScaleOps.cutLineage]]) so
+    * plan depth stays constant, and releases the previous round's blocks.
+    * Peeling depth is the cascade length — single digits on natural
+    * graphs.
     *
     * Join strategy (guide §3.1): the removal count is already on the
     * driver each round (the fixpoint test needs it). While the removed
@@ -63,15 +64,10 @@ object GraphFeatures {
     * stats, so the planner otherwise shuffles the cached edge list.
     * Past the gate both degrade to plain shuffled equi-joins. */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-      maxIters: Int = 30, reliable: Boolean = false,
-      broadcastNodes: Long = 1000000L): DataFrame = {
+      maxIters: Int = 30, broadcastNodes: Long = 1000000L): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(maxIters >= 1 && maxIters <= 100,
       s"maxIters must be in [1, 100]: $maxIters")
-    def cut(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true)
-      else graft.ops.ScaleOps.registerInternalCheckpoint(
-        df.localCheckpoint(true))
     val e0 = edges
       .select(col(srcCol).cast("string").as("a"),
         col(dstCol).cast("string").as("b"))
@@ -83,7 +79,8 @@ object GraphFeatures {
     try {
       // full within-graph degrees: ONE keyed count over the distinct
       // symmetric edges (sym lists every node as `a`)
-      var degs = cut(sym.groupBy(col("a")).agg(count(lit(1)).as("degree"))
+      var degs = cutLineage(sym.groupBy(col("a"))
+        .agg(count(lit(1)).as("degree"))
         .select(col("a").as("node"), col("degree")))
       var aliveN = degs.count()
       var converged = aliveN == 0
@@ -95,8 +92,8 @@ object GraphFeatures {
         else if (aliveN - nRem <= 0) {
           // everything peeled this round: the k-core is empty
           val old = degs
-          degs = cut(degs.filter(col("degree") >= k))
-          graft.ops.ScaleOps.releaseCheckpointBlocks(old)
+          degs = cutLineage(degs.filter(col("degree") >= k))
+          releaseCheckpointBlocks(old)
           aliveN = 0
           converged = true
         } else {
@@ -112,12 +109,12 @@ object GraphFeatures {
             .groupBy(col("a")).agg(count(lit(1)).as("__dec"))
             .select(col("a").as("node"), col("__dec"))
           val old = degs
-          degs = cut(degs.filter(col("degree") >= k)
+          degs = cutLineage(degs.filter(col("degree") >= k)
             .join(gate(dec), Seq("node"), "left")
             .select(col("node"),
               (col("degree") - coalesce(col("__dec"), lit(0L)))
                 .as("degree")))
-          graft.ops.ScaleOps.releaseCheckpointBlocks(old)
+          releaseCheckpointBlocks(old)
         }
         it += 1
       }

@@ -98,10 +98,9 @@ object ScaleOps {
           if (size() > 256) { e.getValue.unpersist(false); true } else false
       })
 
-  /** RDD ids of `localCheckpoint`s the LIBRARY created (cumsum's frozen
-    * nondeterministic inputs, `materialize = true` dedup results, the
-    * generic stable-row-number base) so [[releaseCheckpointBlocks]] can
-    * scope its `LogicalRDD` sweep to them. Unpersisting a CALLER's
+  /** RDD ids of `localCheckpoint`s the LIBRARY created (every
+    * [[cutLineage]] taken without a checkpoint dir) so
+    * [[releaseCheckpointBlocks]] can scope its `LogicalRDD` sweep to them. Unpersisting a CALLER's
     * checkpoint would be worse than sweeping a cache: checkpointed lineage
     * is CUT, so the caller's frame would become unrecomputable, not merely
     * slow. Ids are monotonic per SparkContext (never reused), so a stale
@@ -119,33 +118,32 @@ object ScaleOps {
             size() > 65536
         }))
 
-  /** Record the `LogicalRDD` leaves of a frame the library just
-    * `localCheckpoint`ed so the public release can find them. */
-  private[graft] def registerInternalCheckpoint(df: DataFrame): DataFrame = {
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        internalCheckpointIds.add(lr.rdd.id)
-      case _ => ()
+  /** THE lineage cut: every library checkpoint goes through here. Eagerly
+    * materializes `df` and returns a frame over the materialized rows, so
+    * an iterative or multi-pass chain replans a leaf instead of replaying
+    * a deepening plan, and a nondeterministic plan (rand, partition-id
+    * ordinals) is frozen once for every later job.
+    *
+    * Durable iff the SparkContext has a checkpoint directory — Spark's own
+    * deployment setting (`spark.checkpoint.dir` or `setCheckpointDir`):
+    * then `Dataset.checkpoint` writes files that survive executor and
+    * block loss, the mode a cluster should run in. Otherwise
+    * `localCheckpoint` keeps executor-memory blocks — fast, but lost
+    * unrecoverably with an executor — and records their `LogicalRDD`
+    * leaves so [[releaseCheckpointBlocks]] can find them. Durable
+    * checkpoints are files, not blocks, and need no release. */
+  private[graft] def cutLineage(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
+      df.checkpoint(eager = true)
+    else {
+      val cut = df.localCheckpoint(true)
+      cut.queryExecution.analyzed.collectLeaves().foreach {
+        case lr: org.apache.spark.sql.execution.LogicalRDD =>
+          internalCheckpointIds.add(lr.rdd.id)
+        case _ => ()
+      }
+      cut
     }
-    df
-  }
-
-  /** Cut lineage on an intermediate (usually calendar/cell/spine-BOUNDED;
-    * the Weibull fit base is the one data-sized-but-compact exception)
-    * inside a multi-phase estimator chain, so each later
-    * totals/consumer pass replans a leaf instead of replaying the whole
-    * deepening plan. `reliable = false` (local default) uses
-    * `localCheckpoint`: executor-memory blocks, lost unrecoverably with an
-    * executor — acceptable for provably tiny frames and single-process
-    * runs. `reliable = true` writes a durable checkpoint (requires
-    * `SparkContext.setCheckpointDir`) — the cluster-mode escape hatch,
-    * mirroring [[graft.operators.GraphFeatures.kCore]]'s flag. Local
-    * checkpoints register for [[releaseCheckpointBlocks]]; reliable ones
-    * are files, not blocks, and need no release. */
-  private[graft] def cutLineageBounded(df: DataFrame,
-      reliable: Boolean): DataFrame =
-    if (reliable) df.checkpoint(eager = true)
-    else registerInternalCheckpoint(df.localCheckpoint(true))
 
   /** Release EVERY block a DataFrame's plan pinned by THIS LIBRARY, both
     * kinds: `localCheckpoint` leaves (`LogicalRDD` — registered with the
@@ -614,12 +612,12 @@ object ScaleOps {
     // the caller's recompute-vs-materialize trade (`persistInput`, see
     // scaladoc). A plan carrying rand()/uuid()-class expressions would
     // silently renumber on recompute, so THAT case always freezes a
-    // localCheckpoint (fail-stop on block loss beats corruption); release
+    // lineage cut (fail-stop on block loss beats corruption); release
     // via [[releaseCheckpointBlocks]].
     val nondetInput = hasNondeterministicPlan(perV)
     val cached =
       if (nondetInput)
-        registerInternalCheckpoint(perV.localCheckpoint())
+        cutLineage(perV)
       else if (persistInput) registerInternalPersist(
         perV.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       else perV

@@ -779,10 +779,10 @@ object Association {
     // and agreement subtrees otherwise each replay the full input scan —
     // with a per-row kernel in the label expression (q251 feeds langId
     // through here) that was 3-4 evaluations of the kernel per row
-    val cells = graft.ops.ScaleOps.cutLineageBounded(df
+    val cells = graft.ops.ScaleOps.cutLineage(df
       .filter(col(a).isNotNull && col(b).isNotNull)
       .groupBy(col(a).cast("string").as("va"), col(b).cast("string").as("vb"))
-      .agg(count(lit(1)).cast("double").as("o")), reliable = false)
+      .agg(count(lit(1)).cast("double").as("o")))
     val ma = cells.groupBy(col("va")).agg(sum(col("o")).as("ca"))
     val mb = cells.groupBy(col("vb")).agg(sum(col("o")).as("cb"))
     // pe = Σ_label (ca/n)(cb/n) over labels PRESENT FOR BOTH labelers
@@ -1059,10 +1059,10 @@ object Association {
     // bins²-bounded — checkpointing cuts the lineage so the marginal and
     // total aggregates below (four separate subtrees) read ≤ bins² rows
     // instead of each replaying the contingency aggregation
-    val cells = graft.ops.ScaleOps.cutLineageBounded(pairCells
+    val cells = graft.ops.ScaleOps.cutLineage(pairCells
       .select(binOf("va", ca).as("ba"), binOf("vb", cb).as("bb"), col("pc"))
       .groupBy(col("ba"), col("bb"))
-      .agg(sum(col("pc")).cast("double").as("o")), reliable = false)
+      .agg(sum(col("pc")).cast("double").as("o")))
     graft.ops.ScaleOps.deregisterInternalPersist(pairCells)
     val ma = cells.groupBy(col("ba")).agg(sum(col("o")).as("ra"))
     val mb = cells.groupBy(col("bb")).agg(sum(col("o")).as("cb2"))

@@ -893,7 +893,7 @@ object StatTests {
     * statistic resolves from ONE exclusive-cumsum pass per block, no
     * sort of the pair multiset. Exact integer weights throughout. */
   def hodgesLehmann(a: DataFrame, b: DataFrame, column: String,
-      maxPairCells: Long = 10000000L, reliable: Boolean = false): DataFrame = {
+      maxPairCells: Long = 10000000L): DataFrame = {
     // Both per-distinct-value cell tables CHECKPOINT (value-bounded —
     // the maxPairCells contract), and the difference table persists
     // through the cumsum (persistInput = true; distinct differences are
@@ -901,13 +901,11 @@ object StatTests {
     // previously the size probes, the cumsum totals pass and the final
     // order-statistic aggregate each re-derived the inputs and the
     // CELL CROSS JOIN ran twice (measured 27 sequential jobs for q376
-    // at sf0.1). `reliable` swaps local checkpoints for durable ones.
-    def cp(df: DataFrame): DataFrame =
-      graft.ops.ScaleOps.cutLineageBounded(df, reliable)
-    val ca = cp(a.filter(col(column).isNotNull)
+    // at sf0.1).
+    val ca = graft.ops.ScaleOps.cutLineage(a.filter(col(column).isNotNull)
       .select(col(column).cast("double").as("va"))
       .groupBy(col("va")).agg(count(lit(1)).as("wa")))
-    val cb = cp(b.filter(col(column).isNotNull)
+    val cb = graft.ops.ScaleOps.cutLineage(b.filter(col(column).isNotNull)
       .select(col(column).cast("double").as("vb"))
       .groupBy(col("vb")).agg(count(lit(1)).as("wb")))
     val spark = a.sparkSession

@@ -117,38 +117,67 @@ class ComponentsSpec extends SparkSpecBase {
     assert(after.size <= 2, s"leaked caches on throw: $after")
   }
 
-  test("reliable checkpointDir mode: same results, checkpoint files land in dir") {
-    // executor-loss durability for cluster runs: with checkpointDir set the
-    // per-iteration lineage cut is a RELIABLE checkpoint (files in the dir
-    // survive executor loss) instead of localCheckpoint's executor blocks
+  test("checkpoint dir set: all lineage cuts durable, survive lost blocks") {
+    // ScaleOps.cutLineage is durable iff the context has a checkpoint dir;
+    // one operator per cut site: graph loops, the KM chain, the frozen
+    // string-ordered row number, materialized dedup, a nondeterministic
+    // cumsum input
+    import graft.operators.{Behavior, GraphFeatures}
+    import org.apache.spark.sql.DataFrame
+    val sc = spark.sparkContext
+    val vertices = Seq(1L, 2L, 3L, 4L, 10L, 11L, 12L, 20L).toDF("id")
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L))
+      .toDF("id_a", "id_b")
+    val k4 = for { a <- 1 to 4; b <- 1 to 4 if a < b } yield (s"c$a", s"c$b")
+    val g = (k4 ++ Seq(("c1", "t1"), ("t1", "t2"))).toDF("u", "v")
+    val durations = Seq((1L, false), (2L, true), (3L, false), (3L, false),
+      (5L, true), (6L, false)).toDF("dur", "cens")
+    val words = Seq("pear", "apple", "fig", "kiwi", "date", "lime", "apple")
+      .toDF("w")
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog near the river bank"),
+      (2L, "the quick brown fox jumps over the lazy dog near the river bank"),
+      (3L, "completely different content about spark query engines today"))
+      .toDF("doc_id", "text")
+    val nondet = spark.range(40).select(col("id").cast("double").as("v"),
+      when(rand(7) < 2.0, lit(1L)).as("c"))
+    val ops: Seq[(String, () => DataFrame)] = Seq(
+      "connectedComponents" -> (() => Components.connectedComponents(vertices, edges)),
+      "pageRank" -> (() => Components.pageRank(vertices, edges, iterations = 2)),
+      "kCore" -> (() => GraphFeatures.kCore(g, "u", "v", k = 2)),
+      "kmCurve" -> (() => Behavior.kmCurve(durations, "dur", "cens")),
+      "stableRowNumberGeneric" ->
+        (() => graft.ops.IndexOps.stableRowNumberGeneric(words, Seq("w"), "rn")),
+      "minhashLsh materialize" -> (() => Dedup.minhashLsh(docs, "doc_id", "text",
+        numBands = 16, threshold = 0.5, materialize = true)),
+      "nondeterministic cumsum input" -> (() => graft.ops.ScaleOps
+        .withExclusiveRunningSums(nondet, col("v"), Seq("c"), Seq("cum"))._1))
+    def rows(df: DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    val local = ops.map { case (name, op) => name -> rows(op()) }.toMap
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_").toFile
+    def countFiles(f: java.io.File): Int =
+      if (f.isDirectory) f.listFiles.map(countFiles).sum else 1
     try {
-      val vertices = Seq(1L, 2L, 3L, 4L, 10L, 11L, 12L, 20L).toDF("id")
-      val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L))
-        .toDF("id_a", "id_b")
-      val local = Components.connectedComponents(vertices, edges)
-        .as[(Long, Long)].collect().toMap
-      val durable = Components.connectedComponents(vertices, edges,
-          checkpointDir = Some(dir.getAbsolutePath))
-        .as[(Long, Long)].collect().toMap
-      assert(durable == local, s"mode changed results: $durable vs $local")
-
-      val prLocal = Components.pageRank(vertices, edges, iterations = 2)
-        .as[(Long, Double)].collect().toMap
-      val prDurable = Components.pageRank(vertices, edges, iterations = 2,
-          checkpointDir = Some(dir.getAbsolutePath))
-        .as[(Long, Double)].collect().toMap
-      assert(prDurable == prLocal, s"pageRank mode changed results")
-
-      def countFiles(f: java.io.File): Int =
-        if (f.isDirectory) f.listFiles.map(countFiles).sum else 1
-      assert(countFiles(dir) > 0, "no reliable checkpoint files written")
+      sc.setCheckpointDir(dir.getAbsolutePath)
+      ops.foreach { case (name, op) =>
+        val before = countFiles(dir)
+        val out = op()
+        assert(countFiles(dir) > before, s"$name: no checkpoint files written")
+        assert(rows(out) == local(name), s"$name: durable cut changed the result")
+        // lost blocks: a result still reading a local checkpoint fails here
+        sc.getPersistentRDDs.values.foreach(_.unpersist(true))
+        assert(rows(out) == local(name), s"$name: changed after lost blocks")
+      }
     } finally {
+      // restore "no dir": later suites share this context
+      org.apache.spark.CheckpointDirHatch.clear(sc)
       def rm(f: java.io.File): Unit = {
         if (f.isDirectory) f.listFiles.foreach(rm); f.delete()
       }
       rm(dir)
     }
+    assert(sc.getCheckpointDir.isEmpty)
   }
 
   test("nearDupClusters collapses the transitive near-dup chain") {
