@@ -1,5 +1,9 @@
 package graft
 
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.cfg.JsonNodeFeature
+import scala.jdk.CollectionConverters._
+
 /** Per-round benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line.
   *
@@ -9,12 +13,28 @@ package graft
   * first so JIT/classloading costs don't land on the first measured query.
   */
 object Bench {
+  import LocalSession.dropAllBlocks
+
+  /** A committed JSON artifact (BENCH_LOCAL.json, BENCH_SF1.json), if
+    * present. Floats parse as BigDecimal with their written scale, so a
+    * carried number re-emits with the digits it was written with. */
+  private[graft] def readJson(file: java.io.File): Option[JsonNode] =
+    Some(file).filter(_.exists).map(f =>
+      new ObjectMapper()
+        .enable(DeserializationFeature.USE_BIG_DECIMAL_FOR_FLOATS)
+        .configure(JsonNodeFeature.STRIP_TRAILING_BIGDECIMAL_ZEROES, false)
+        .readTree(f))
+
+  /** The members of the JSON object `json.name` (empty when absent). */
+  private[graft] def fields(json: JsonNode, name: String): Map[String, JsonNode] =
+    Option(json.get(name)).map(_.properties.asScala
+      .map(e => e.getKey -> e.getValue).toMap).getOrElse(Map.empty)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = LocalSession.cpus(32)
     val spark = LocalSession(cpus)
 
-    import scala.jdk.CollectionConverters._
     def gcMillis(): Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
 
@@ -39,14 +59,6 @@ object Bench {
     // equivalent to q08's 1.07s).
     // Optional args narrow the run to matching query prefixes ("q89 q116")
     // for local iteration; the driver passes none and gets the full suite.
-    // clearCache drops CacheManager entries (the materialize=false LSH
-    // bases); the getPersistentRDDs sweep additionally releases checkpoint
-    // blocks (materialize=true results, graph-op labels) that live on the
-    // RDDs, not in the CacheManager — between queries NOTHING stays cached
-    def dropAllBlocks(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
     // Broadcast blocks are NOT released by dropAllBlocks — ContextCleaner
     // reclaims them only after the driver GCs the broadcast refs, and its
     // own periodic GC (spark.cleaner.periodicGC.interval) defaults to 30
@@ -84,7 +96,7 @@ object Bench {
       if (args.isEmpty) all
       else all.filter(n => args.exists(a => n == a || n.startsWith(a + "_")))
     names.zipWithIndex.foreach { case (n, i) =>
-      run(n); dropAllBlocks(); maybeGc(i)
+      run(n); dropAllBlocks(spark); maybeGc(i)
     }
     val calibPre = calibrate()
 
@@ -102,7 +114,7 @@ object Bench {
     val resultsMin2 = names.zipWithIndex.map { case (n, i) =>
       val (a, ga) = run(n)
       val (b, gb) = run(n)
-      dropAllBlocks(); maybeGc(i)
+      dropAllBlocks(spark); maybeGc(i)
       gcOfMin(n) = if (a >= 0 && (b < 0 || a <= b)) ga else gb
       n -> (if (a < 0 || b < 0) -1.0 else math.min(a, b))
     }
@@ -147,26 +159,15 @@ object Bench {
     val sfTag = sfDir.split('/').last.stripPrefix("sf")
     val prevFile = new java.io.File(
       if (sfTag == "0.1") "BENCH_LOCAL.json" else s"BENCH_LOCAL_sf$sfTag.json")
+    val prevJson = readJson(prevFile)
+    def obj(field: String): Map[String, JsonNode] =
+      prevJson.map(fields(_, field)).getOrElse(Map.empty)
+    // guard against a hand-edited/legacy file holding a different sf
+    val sameSf = prevJson.exists(j => Option(j.get("sf")).exists(_.asText == sfDir))
     val (prev: Map[String, Double], prevCalib: Option[Double]) =
-      if (!prevFile.exists) (Map.empty[String, Double], None)
-      else {
-        val txt = scala.io.Source.fromFile(prevFile).mkString
-        // guard against a hand-edited/legacy file holding a different sf
-        val sameSf = s""""sf":"$sfDir"""".r.findFirstIn(txt).isDefined
-        if (!sameSf) (Map.empty[String, Double], None)
-        else {
-          // scope the match to the queries_ms object only — "-1" failure
-          // entries are integer-valued in queries_sec too, and last-wins
-          // toMap over both would silently prefer the wrong map
-          val msObj = """"queries_ms":\{([^}]*)\}""".r
-            .findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
-          val m = """"(q\w+)":(-?\d+)""".r.findAllMatchIn(msObj)
-            .map(m => m.group(1) -> m.group(2).toDouble / 1000.0).toMap
-          val c = """"calib_ms":(\d+)""".r.findFirstMatchIn(txt)
-            .map(_.group(1).toDouble / 1000.0)
-          (m, c)
-        }
-      }
+      if (!sameSf) (Map.empty[String, Double], None)
+      else (obj("queries_ms").map { case (k, v) => k -> v.asDouble / 1000.0 },
+        prevJson.flatMap(j => Option(j.get("calib_ms"))).map(_.asDouble / 1000.0))
     // Re-baseline markers: best-known minima are ALL-TIME, so a DELIBERATE
     // design change that trades local speed for scale-safety (r10: q171's
     // checkpoint-frozen shape was faster locally but fail-stop under block
@@ -176,16 +177,9 @@ object Bench {
     // best with the fresh measurement (instead of min-merging) and report
     // it as a re-baseline, not a regression; the marker is consumed by
     // that run (one-shot — it cannot silently absorb later regressions).
-    val rebaseline: Map[String, String] =
-      if (!prevFile.exists) Map.empty[String, String]
-      else {
-        val txt = scala.io.Source.fromFile(prevFile).mkString
-        """"rebaseline":\{([^}]*)\}""".r.findFirstMatchIn(txt)
-          .map(m => """"(q\w+)":"([^"]*)"""".r.findAllMatchIn(m.group(1))
-            .map(x => x.group(1) -> x.group(2)).toMap)
-          .getOrElse(Map.empty[String, String])
-          .filter { case (k, _) => all.contains(k) }
-      }
+    val rebaseline: Map[String, String] = obj("rebaseline")
+      .map { case (k, v) => k -> v.asText }
+      .filter { case (k, _) => all.contains(k) }
     // Interference normalization. Two estimators of "how much slower is
     // this run's environment than the conditions the minima were recorded
     // under", and the bar relaxes by the LARGER of the two:
@@ -240,7 +234,7 @@ object Bench {
     val results = resultsMin2.map { case (k, v) =>
       if (!flagged(k, v)) k -> v
       else {
-        val (c, gc) = run(k); dropAllBlocks()
+        val (c, gc) = run(k); dropAllBlocks(spark)
         if (c >= 0 && c < v) gcOfMin(k) = gc
         k -> (if (c < 0) v else math.min(v, c))
       }

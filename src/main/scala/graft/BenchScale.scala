@@ -22,6 +22,8 @@ import org.apache.spark.sql.functions._
   * reads. Not a driver contract — a committed trend artifact.
   */
 object BenchScale {
+  import Bench.{fields, readJson}
+  import LocalSession.dropAllBlocks
 
   /** Per-table long key columns shifted per replica (stride × replica). */
   private val keyCols: Map[String, Seq[String]] = Map(
@@ -190,21 +192,13 @@ object BenchScale {
 
     // sf0.1 best-knowns (keyed by full query name) for the
     // linear-extrapolation denominator
-    val sf01Raw: Map[String, Double] = {
-      val txt = scala.io.Source.fromFile("BENCH_LOCAL.json").mkString
-      val msObj = """"queries_ms":\{([^}]*)\}""".r
-        .findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
-      """"(q\w+)":(-?\d+)""".r.findAllMatchIn(msObj)
-        .map(m => m.group(1) -> m.group(2).toDouble / 1000.0).toMap
-    }
+    val sf01Raw: Map[String, Double] =
+      fields(readJson(new java.io.File("BENCH_LOCAL.json")).get, "queries_ms")
+        .map { case (k, v) => k -> v.asDouble / 1000.0 }
     // note keys stay numeric-prefix shorthand (unique within the spot set)
     def qk(k: String): String =
       "q" + k.takeWhile(_ != '_').dropWhile(!_.isDigit).toInt
 
-    def dropAllBlocks(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
     def run(name: String): Double = {
       val t0 = System.nanoTime()
       try SparkEntry.queries(name)(spark, outDir)
@@ -228,26 +222,23 @@ object BenchScale {
     // rows carried from the previous artifact for spot queries NOT in
     // this run (sec / sf01_best_sec / vs_linear verbatim; notes refresh
     // from the current outputQuadratic map on re-emit)
-    val carried: Map[String, (String, String, String)] = {
-      val f = new java.io.File("BENCH_SF1.json")
-      if (!f.exists) Map.empty
-      else {
-        val txt = scala.io.Source.fromFile(f).mkString
-        val row =
-          (""""(q\w+)":\{"sec":(-?[\d.]+),"sf01_best_sec":(-?[\d.]+),""" +
-            """"vs_linear":(-?[\d.]+|"[^"]*")""").r
-        val byKey = row.findAllMatchIn(txt).map(m =>
-          m.group(1) -> ((m.group(2), m.group(3), m.group(4)))).toMap
-        spotQueries.flatMap(n => byKey.get(n).map(n -> _)).toMap
-      }
-    }
+    val stored = readJson(new java.io.File("BENCH_SF1.json")).map(fields(_, "queries"))
+      .getOrElse(Map.empty)
+    val carried: Map[String, (String, String, String)] =
+      spotQueries.flatMap(n => stored.get(n).flatMap { r =>
+        Seq("sec", "sf01_best_sec", "vs_linear").map(f => Option(r.get(f))) match {
+          case Seq(Some(sec), Some(best), Some(vsl)) =>
+            Some(n -> ((sec.toString, best.toString, vsl.toString)))
+          case _ => None
+        }
+      }).toMap
     // one warm pass (unmeasured), then min-of-2
-    toRun.foreach { n => run(n); dropAllBlocks() }
+    toRun.foreach { n => run(n); dropAllBlocks(spark) }
     val results = spotQueries.map { n =>
       if (!toRun.contains(n)) n -> -2.0 // sentinel: carry the stored row
       else {
-        val a = run(n); dropAllBlocks()
-        val b = run(n); dropAllBlocks()
+        val a = run(n); dropAllBlocks(spark)
+        val b = run(n); dropAllBlocks(spark)
         val v = if (a < 0 || b < 0) -1.0 else math.min(a, b)
         System.err.println(f"[bench-sf1] $n%-30s $v%.3fs")
         n -> v
@@ -268,8 +259,8 @@ object BenchScale {
         }
         (System.nanoTime() - t0) / 1e9
       }
-      val a = once(); dropAllBlocks()
-      val b = once(); dropAllBlocks()
+      val a = once(); dropAllBlocks(spark)
+      val b = once(); dropAllBlocks(spark)
       val v = if (a < 0 || b < 0) -1.0 else math.min(a, b)
       System.err.println(f"[bench-sf1] $tag%-30s $v%.3fs")
       tag -> v
@@ -277,14 +268,9 @@ object BenchScale {
     import org.apache.spark.sql.functions.col
     // capped counterfactuals re-measure only on a full run; a narrowed
     // run carries their stored rows like any unmeasured spot query
-    val cappedCarried: Map[String, Double] = {
-      val f = new java.io.File("BENCH_SF1.json")
-      if (!f.exists) Map.empty
-      else {
-        val txt = scala.io.Source.fromFile(f).mkString
-        """"(q\w+_capped)":\{"sec":(-?[\d.]+)""".r.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
+    val cappedCarried: Map[String, Double] = stored.collect {
+      case (n, r) if n.endsWith("_capped") && !spotQueries.contains(n) =>
+        n -> r.get("sec").asDouble
     }
     val capped = if (args.nonEmpty)
       cappedCarried.toSeq.sortBy(_._1)

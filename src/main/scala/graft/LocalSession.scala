@@ -24,4 +24,14 @@ object LocalSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Release everything a query left cached: CacheManager entries (the
+    * materialize=false LSH bases) and the persistent RDDs, which hold the
+    * checkpoint blocks of materialize=true results and graph-op labels
+    * outside the CacheManager. Bench, BenchScale and Verify call it
+    * between queries so nothing stays cached. */
+  def dropAllBlocks(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+  }
 }

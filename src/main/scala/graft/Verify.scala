@@ -44,12 +44,7 @@ object Verify {
       }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      } finally {
-        // between queries nothing stays cached: CacheManager entries AND
-        // checkpoint blocks (materialize=true results, graph-op labels)
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      }
+      } finally LocalSession.dropAllBlocks(spark)
     }
     // fail LOUDLY on an empty dump: rc 0 with nothing to compare reads as
     // "entry ok, zero queries" downstream, which silently voids the gate

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.catalog.DedupQueries
 import graft.ops.{CompareOps, IndexOps}
 import graft.operators.Dedup
 import graft.sources.EventsSource
@@ -331,7 +332,7 @@ class RegressionSpec extends SparkSpecBase {
       df.select("id_a", "id_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val withSh = docs.join(SparkEntry.md5Simhash48(docs, "doc_id", "text"),
+    val withSh = docs.join(DedupQueries.md5Simhash48(docs, "doc_id", "text"),
       col("doc_id") === col("__sid")).drop("__sid")
     def simhashRun(cap: Option[Long]) = pairSet(
       graft.operators.Dedup.simhashNearDup(withSh, "doc_id", "text",
